@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Deduplication operators for a training-data pipeline, each designed
   * around its shuffle shape at 100 TB:
@@ -19,7 +20,10 @@ import org.apache.spark.sql.functions._
   * Candidates are then verified with the exact n-gram Jaccard (MinHash) or
   * hamming distance (SimHash) — the two-phase candidate/verify pattern every
   * large-scale dedup paper uses. Everything is pure SQL expressions: no
-  * UDFs, no driver-side state, fully whole-stage-codegen'd.
+  * UDFs, fully whole-stage-codegen'd. The one driver-side step is
+  * componentMinLabels' small-frontier finish: a pair graph whose edges
+  * fit `spark.sql.autoBroadcastJoinThreshold` is collected and labelled
+  * by union-find on the driver instead of by distributed rounds.
   */
 object Dedup {
 
@@ -360,7 +364,17 @@ object Dedup {
     * every large-scale dedup pipeline uses (the survivor is the node whose
     * label == itself).
     *
-    * Implementation is iterated min-label propagation WITH pointer jumping
+    * The symmetric, deduplicated edge relation is cut once, and the same
+    * action observes its row count (an `Observation`, so no extra job).
+    * Small-frontier finish: when the edges fit
+    * `spark.sql.autoBroadcastJoinThreshold` (see [[graft.SmallFrontier]]),
+    * they are collected as primitive arrays and a driver-side min-root
+    * union-find labels every node; the result is a DataFrame over the
+    * driver's label arrays with the loop's schema and exactly the loop's
+    * labels. Non-BIGINT ids and edges with a NULL id always take the
+    * loop, which keeps its NULL semantics.
+    *
+    * The loop is iterated min-label propagation WITH pointer jumping
     * (label := label of one's label), so convergence is O(log diameter)
     * keyed join/agg rounds, not O(diameter) — a duplicate chain of length
     * 1000 converges in ~10 rounds. All state lives in DataFrames keyed by
@@ -369,9 +383,13 @@ object Dedup {
     * and each round RELEASES the previous round's checkpoint blocks once
     * the new round has materialized (localCheckpoint is eager), so peak
     * block-manager footprint is two label tables + edges, not rounds×.
-    * The only driver-side work is the per-round convergence test — a
-    * keyed anti-join emptiness check, the same protocol as any iterative
-    * distributed graph algorithm short of GraphX.
+    * Convergence is observed on each round's checkpoint action (the count
+    * of labels the round lowered), so a round is one action; a loop still
+    * moving labels after `maxRounds` rounds throws
+    * IllegalStateException rather than return partial labels.
+    * `maxRounds` bounds only these distributed rounds: the driver finish
+    * runs none, so an input that fits the threshold never meets the cap,
+    * and the same input at threshold -1 may.
     *
     * Fault-tolerance: by default rounds cut lineage with localCheckpoint
     * — fast, but its blocks are NOT recoverable, so an executor loss
@@ -387,8 +405,9 @@ object Dedup {
   def componentMinLabels(pairs: DataFrame, idA: String = "id_a",
                          idB: String = "id_b",
                          maxRounds: Int = 50,
-                         reliable: Boolean = false,
-                         roundsPerCut: Int = 1): DataFrame = {
+                         reliable: Boolean = false): DataFrame = {
+    require(maxRounds >= 1,
+      s"componentMinLabels: maxRounds must be >= 1, got $maxRounds")
     def cut(df: DataFrame): DataFrame =
       graft.Ckpt.cut(df, reliable)
     // Both edge directions from ONE evaluation of `pairs`: the union-of-
@@ -403,19 +422,48 @@ object Dedup {
     // hash(src)-partitioned for every fixpoint round's join. The old
     // distinct()-then-repartition shape shuffled the full edge relation
     // twice (hash(src,dst), then hash(src)).
+    val size = org.apache.spark.sql.Observation("cc_edges")
     val edges = cut(pairs.select(explode(array(
         struct(col(idA).as("src"), col(idB).as("dst")),
         struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("src")) // rounds join on src: no re-shuffle
-      .dropDuplicates(Seq("src", "dst")))
+      .dropDuplicates(Seq("src", "dst"))
+      .observe(size, count(lit(1)).as("n"),
+        count(when(col("src").isNull || col("dst").isNull, 1)).as("nulls")))
+    val seen = size.get
+    val labels =
+      if (edges.schema("src").dataType == LongType &&
+          seen("nulls").asInstanceOf[Long] == 0L &&
+          graft.SmallFrontier.fits(edges, seen("n").asInstanceOf[Long]))
+        driverMinLabels(edges)
+      else propagateMinLabels(edges, maxRounds, cut)
+    releaseCheckpoint(edges)
+    labels
+  }
+
+  /** componentMinLabels' finish: union-find over the collected symmetric
+    * edges (every endpoint appears as a src), one (node, label) row per
+    * node, typed like the loop's output.
+    */
+  private def driverMinLabels(edges: DataFrame): DataFrame = {
+    val ends = graft.SmallFrontier.collectLongs(edges) // src, dst, src, ...
+    val uf = graft.SmallFrontier.MinUnionFind.over(ends)
+    for (i <- 0 until ends.length by 2) uf.union(ends(i), ends(i + 1))
+    val id = edges.schema("src")
+    org.apache.spark.sql.graft.LongColumns.toDF(edges.sparkSession,
+      StructType(Seq(id.copy(name = "node"), id.copy(name = "label"))),
+      uf.ids, uf.roots)
+  }
+
+  /** componentMinLabels' distributed rounds over the cut edges. */
+  private def propagateMinLabels(edges: DataFrame, maxRounds: Int,
+                                 cut: DataFrame => DataFrame): DataFrame = {
     var labels = cut(edges.groupBy(col("src"))
       .agg(min(col("dst")).as("m"))
       .select(col("src").as("node"),
         least(col("src"), col("m")).as("label")))
     var labelsCk = labels // the checkpointed DF whose blocks back `labels`
-    var round = 0
-    var converged = false
     // one propagation round: min neighbor label, then one pointer jump.
     // Returns (node, olabel, label) — olabel is THIS round's starting
     // label, so "did the round move" is measurable on the output alone
@@ -436,36 +484,25 @@ object Dedup {
           least(col("label"), coalesce(col("llabel"), col("label")))
             .as("label"))
     }
-    while (!converged && round < maxRounds) {
-      // `roundsPerCut` rounds compose into ONE materialized action.
-      // Convergence stays exact at any batch size — labels decrease
-      // monotonically, so "the batch's LAST round moved nothing" iff
-      // the fixpoint is reached. The r14 measurement kept the DEFAULT
-      // at 1: batch=2 ran every WCC consumer 10-40% SLOWER at sf0.1
-      // (llm_dup_clusters 1.73→1.95 s, llm_clean_corpus 2.43→3.07 s) —
-      // the deeper per-action plan costs more in optimizer/AQE overhead
-      // plus one wasted post-convergence round than the saved action
-      // latency. The knob remains for deployments whose driver-to-
-      // cluster round-trip genuinely dominates a round's compute.
+    var round = 0
+    var moved = -1L
+    while (moved != 0L) {
+      if (round == maxRounds)
+        throw new IllegalStateException(s"componentMinLabels did not " +
+          s"converge within maxRounds = $maxRounds: the last round still " +
+          s"lowered $moved labels")
       // Convergence rides the checkpoint job via observe()
       // (CollectMetrics completes with the localCheckpoint action):
-      // ONE action per batch, zero extra convergence jobs.
-      val steps = math.min(roundsPerCut, maxRounds - round)
-      var cur = labels
-      for (i <- 0 until steps) {
-        cur = step(cur)
-        if (i < steps - 1) cur = cur.select(col("node"), col("label"))
-      }
+      // ONE action per round, zero extra convergence jobs.
       val obs = org.apache.spark.sql.Observation(s"cc_moved_r$round")
-      val next = cut(cur.observe(obs,
+      val next = cut(step(labels).observe(obs,
         count(when(col("label") < col("olabel"), 1)).as("moved")))
-      converged = obs.get("moved").asInstanceOf[Long] == 0L
+      moved = obs.get("moved").asInstanceOf[Long]
       releaseCheckpoint(labelsCk) // next is materialized; free the old round
       labelsCk = next
       labels = next.select("node", "label")
-      round += steps
+      round += 1
     }
-    releaseCheckpoint(edges)
     labels
   }
 
@@ -476,9 +513,10 @@ object Dedup {
     * minimum id — per duplicate cluster; the per-pair greedy rule keeps
     * spurious extra survivors whenever a cluster member's only edges point
     * to larger ids). Plan: one map-side quality filter, one keyed
-    * aggregate, one banding join, then O(log diameter) label-propagation
-    * rounds over the (small) dup graph — nothing quadratic, nothing
-    * driver-side beyond the per-round convergence check.
+    * aggregate, one banding join, then the component labels of the
+    * (small) dup graph — O(log diameter) label-propagation rounds, or a
+    * driver-side union-find once the graph fits the broadcast threshold
+    * (componentMinLabels) — nothing quadratic.
     *
     * `portable = false` (the default) uses the xxhash64 signature fast
     * path; pass `portable = true` only when the run must replay in an

@@ -2,8 +2,9 @@ package graft.operators
 
 import graft.{Op, Tables}
 import graft.llm.Dedup
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Graph centrality over entity graphs — PageRank (Brin & Page 1998) as a
   * Pregel-style iterative fixpoint, the second member of the engine's
@@ -1282,9 +1283,21 @@ object Graphs {
     * aggregate over the CURRENT (contracted) edges, a component merge
     * on the picked label pairs (≤ #components rows) via
     * componentMinLabels, and one relabel+collapse of the contracted
-    * edges against that small map. The forest is unique by total edge
-    * order, so GraphsSpec pins it edge-for-edge against a sequential
-    * Kruskal replay.
+    * edges against that small map, whose cut also observes the new
+    * working set's row count.
+    *
+    * Small-frontier finish: once that working set fits
+    * `spark.sql.autoBroadcastJoinThreshold` (see [[graft.SmallFrontier]];
+    * BIGINT endpoints only), it is collected and finished by Kruskal on
+    * the driver. Contraction keeps every cross edge the forest can still
+    * use, so the rounds' picks plus Kruskal's are the same unique forest.
+    * An empty working set ends the run; one still non-empty and too big
+    * after `maxRounds` rounds throws IllegalStateException rather than
+    * return a partial forest. `maxRounds` bounds only the distributed
+    * rounds: a working set that fits the threshold is finished whatever
+    * the cap, so the same graph at threshold -1 may hit it. The forest is unique by total edge order,
+    * so GraphsSpec pins it edge-for-edge against a sequential Kruskal
+    * replay at several thresholds.
     */
   def maxSpanningForest(edges: DataFrame, srcCol: String = "src",
                         dstCol: String = "dst", wCol: String = "w",
@@ -1292,6 +1305,12 @@ object Graphs {
                         reliable: Boolean = false): DataFrame = {
     def cut(df: DataFrame): DataFrame =
       graft.Ckpt.cut(df, reliable)
+    // the working set's cut, with its row count observed on that action
+    def cutCounted(df: DataFrame, round: Int): (DataFrame, Long) = {
+      val obs = org.apache.spark.sql.Observation(s"msf_cur_$round")
+      val ck = cut(df.observe(obs, count(lit(1)).as("n")))
+      (ck, obs.get("n").asInstanceOf[Long])
+    }
     val base = cut(edges.select(
         least(col(srcCol), col(dstCol)).as("src"),
         greatest(col(srcCol), col(dstCol)).as("dst"), col(wCol).as("w"))
@@ -1299,32 +1318,36 @@ object Graphs {
       .groupBy(col("src"), col("dst")).agg(max(col("w")).as("w")))
     // contracted working set: endpoints in component space, original
     // edge kept inside the min-struct; one row per component pair
-    var cur = cut(base.select(col("src").as("ca"), col("dst").as("cb"),
-      struct((-col("w")).as("nw"), col("src"), col("dst")).as("e")))
+    var (cur, curRows) = cutCounted(base.select(col("src").as("ca"),
+      col("dst").as("cb"),
+      struct((-col("w")).as("nw"), col("src"), col("dst")).as("e")), 0)
     val picks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var round = 0
     var done = false
-    while (!done && round < maxRounds) {
-      val obs = org.apache.spark.sql.Observation(s"msf_cross_$round")
-      // No per-round distinct (r13): both endpoints' components may pick
-      // the same edge, but every consumer tolerates the duplicate row —
-      // the observation only tests n == 0, componentMinLabels dedups its
-      // pair input itself, the contraction relabel is keyed on the label
-      // map, and the FINAL distinct() below collapses the chosen set
-      // once. Dropping it removes one exchange + one AQE stage per
-      // Borůvka round.
-      val pick = cut(cur.select(
-          explode(array(col("ca"), col("cb"))).as("c"),
-          struct(col("e").as("e"), col("ca"), col("cb")).as("p"))
-        .groupBy(col("c")).agg(min(col("p")).as("p"))
-        .select(col("p.e.src").as("src"), col("p.e.dst").as("dst"),
-          (-col("p.e.nw")).as("w"), col("p.ca").as("ca"),
-          col("p.cb").as("cb"))
-        .observe(obs, count(lit(1)).as("n")))
-      if (obs.get("n").asInstanceOf[Long] == 0L) {
-        graft.llm.Dedup.releaseCheckpoint(pick)
+    while (!done) {
+      if (curRows == 0L) done = true
+      else if (cur.schema("ca").dataType == LongType &&
+          graft.SmallFrontier.fits(cur, curRows)) {
+        picks += kruskalPicks(cur, cut)
         done = true
+      } else if (round == maxRounds) {
+        throw new IllegalStateException(s"maxSpanningForest did not " +
+          s"converge within maxRounds = $maxRounds: $curRows " +
+          s"cross-component edges remain")
       } else {
+        // No per-round distinct (r13): both endpoints' components may
+        // pick the same edge, but every consumer tolerates the duplicate
+        // row — componentMinLabels dedups its pair input itself, the
+        // contraction relabel is keyed on the label map, and the FINAL
+        // distinct() below collapses the chosen set once. Dropping it
+        // removes one exchange + one AQE stage per Borůvka round.
+        val pick = cut(cur.select(
+            explode(array(col("ca"), col("cb"))).as("c"),
+            struct(col("e").as("e"), col("ca"), col("cb")).as("p"))
+          .groupBy(col("c")).agg(min(col("p")).as("p"))
+          .select(col("p.e.src").as("src"), col("p.e.dst").as("dst"),
+            (-col("p.e.nw")).as("w"), col("p.ca").as("ca"),
+            col("p.cb").as("cb")))
         // Defer the chosen-forest union to the end of the run (r13): the
         // per-round cut(chosen ∪ pick) materialization bought nothing —
         // `chosen` is only read once, after convergence — and cost one
@@ -1334,20 +1357,13 @@ object Graphs {
         // edges, bounded by the forest size.
         picks += pick
         // merge on the CONTRACTED graph: labels linked by chosen edges
-        // roundsPerCut stays 1 here too (r14 MEASURED, VERDICT r13 #6):
-        // batching two label-halving steps per action — the bounded
-        // pointer-doubling direction the oracle uses — ran graph_mst
-        // 9.9/10.3 s vs 7.9/10.2 s interleaved at sf0.1; the deeper
-        // per-action plan costs more in optimizer/AQE overhead than the
-        // saved driver actions, exactly as componentMinLabels' own
-        // roundsPerCut note records for the big WCC consumers.
         val merged = graft.llm.Dedup.componentMinLabels(
           pick.select(col("ca").as("id_a"), col("cb").as("id_b")))
         val relabel = merged.select(col("node").as("old"),
           col("label").as("nu"))
         // contract: relabel endpoints, drop intra edges, collapse
         // parallel edges to the per-pair min-struct
-        val nextCur = cut(cur
+        val (nextCur, nextRows) = cutCounted(cur
           .join(relabel.withColumnRenamed("old", "ca")
             .withColumnRenamed("nu", "na"), Seq("ca"), "left")
           .join(relabel.withColumnRenamed("old", "cb")
@@ -1357,25 +1373,58 @@ object Graphs {
           .filter(col("a") =!= col("b"))
           .select(least(col("a"), col("b")).as("ca"),
             greatest(col("a"), col("b")).as("cb"), col("e"))
-          .groupBy(col("ca"), col("cb")).agg(min(col("e")).as("e")))
+          .groupBy(col("ca"), col("cb")).agg(min(col("e")).as("e")),
+          round + 1)
         graft.llm.Dedup.releaseCheckpoint(cur)
         graft.llm.Dedup.releaseCheckpoint(merged)
         cur = nextCur
+        curRows = nextRows
         round += 1
       }
     }
     graft.llm.Dedup.releaseCheckpoint(cur)
     graft.llm.Dedup.releaseCheckpoint(base)
-    if (picks.isEmpty)
-      base.filter(lit(false)).select(col("src"), col("dst"), col("w"))
+    def forestOf(p: DataFrame) = p.select(col("src"), col("dst"), col("w"))
+    if (picks.isEmpty) forestOf(base.filter(lit(false)))
+    else if (round == 0) forestOf(picks.head) // Kruskal's picks alone
     else {
       // one action collapses all rounds' picks (dupes from the dropped
       // per-round distinct included); only then release the pick blocks
-      val forest = cut(picks.reduce(_ unionByName _)
-        .select(col("src"), col("dst"), col("w")).distinct())
+      val forest = cut(forestOf(picks.reduce(_ unionByName _)).distinct())
       picks.foreach(graft.llm.Dedup.releaseCheckpoint)
       forest
     }
+  }
+
+  /** maxSpanningForest's finish: Kruskal over the working set. Spark sorts
+    * it ascending by the edge struct `e` — the operator's total order,
+    * compared exactly as the rounds' min(e) compares it — and only the
+    * (ca, cb) pairs reach the driver, where a min-root union-find keeps
+    * each pair that still joins two components. `cur` has one row per
+    * pair, so a semi-join on the kept pairs returns Kruskal's edges in the
+    * rounds' (src, dst, w, ca, cb) shape; it is cut because `cur`'s blocks
+    * are released before the forest is read. The rounds read those
+    * columns out of a min() aggregate, which Spark types nullable; a
+    * `when` with no `otherwise` types them the same way here, so the
+    * forest's schema does not depend on which path built it.
+    */
+  private def kruskalPicks(cur: DataFrame,
+                           cut: DataFrame => DataFrame): DataFrame = {
+    val ends = graft.SmallFrontier.collectLongs(cur.coalesce(1)
+      .sortWithinPartitions(col("e")).select(col("ca"), col("cb")))
+    val uf = graft.SmallFrontier.MinUnionFind.over(ends)
+    val (ka, kb) = (Array.newBuilder[Long], Array.newBuilder[Long])
+    for (i <- 0 until ends.length by 2 if uf.union(ends(i), ends(i + 1))) {
+      ka += ends(i); kb += ends(i + 1)
+    }
+    val kept = org.apache.spark.sql.graft.LongColumns.toDF(cur.sparkSession,
+      StructType(Seq(cur.schema("ca"), cur.schema("cb"))),
+      ka.result(), kb.result())
+    def nullable(c: Column, name: String) = when(c.isNotNull, c).as(name)
+    cut(cur.join(kept, Seq("ca", "cb"), "left_semi")
+      .select(nullable(col("e.src"), "src"), nullable(col("e.dst"), "dst"),
+        nullable(-col("e.nw"), "w"), nullable(col("ca"), "ca"),
+        nullable(col("cb"), "cb")))
   }
 
   /** Full core decomposition — coreness per node — by H-INDEX ITERATION

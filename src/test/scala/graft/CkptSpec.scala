@@ -65,10 +65,13 @@ class CkptSpec extends SparkSpec {
     import spark.implicits._
     // a 256-node path with strictly increasing weights forces Boruvka
     // through its full log-round ladder with a CC merge inside each
-    // round — the deepest compounding this engine performs
+    // round — the deepest compounding this engine performs (threshold
+    // -1: the small-frontier finish would otherwise skip the rounds)
     val edges = (0L until 255L).map(i => (i, i + 1, i.toDouble))
       .toDF("src", "dst", "w")
-    val forest = operators.Graphs.maxSpanningForest(edges)
-    assert(forest.count() == 255) // a path's spanning forest is itself
+    withBroadcastThreshold(Some(-1L)) {
+      val forest = operators.Graphs.maxSpanningForest(edges)
+      assert(forest.count() == 255) // a path's spanning forest is itself
+    }
   }
 }

@@ -376,13 +376,38 @@ class DedupSpec extends SparkSpec {
     // a chain (forces pointer-jumping rounds) plus a separate pair
     val pairs = ((1L to 9L).map(i => (i, i + 1)) ++ Seq((100L, 101L)))
       .toDF("id_a", "id_b")
-    def labelsOf(reliable: Boolean) =
-      Dedup.componentMinLabels(pairs, reliable = reliable).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val rel = labelsOf(reliable = true)
-    assert(rel == labelsOf(reliable = false))
+    def labelsOf(reliable: Boolean) = {
+      val out = Dedup.componentMinLabels(pairs, reliable = reliable)
+      (out.schema, out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    }
+    // the driver finish (default threshold, and exactly the 20 symmetric
+    // BIGINT edges' bytes) and the rounds (-1) agree, schema included
+    val runs = Seq(None, Some(-1L), Some(20L * 16)).map { t =>
+      withBroadcastThreshold(t) {
+        val rel = labelsOf(reliable = true)
+        assert(rel == labelsOf(reliable = false))
+        rel
+      }
+    }
+    assert(runs.distinct.size == 1, runs)
+    val rel = runs.head._2
     assert(rel.filter(_._1 <= 10L).forall(_._2 == 1L))
     assert(rel.filter(_._1 >= 100L).forall(_._2 == 100L))
+  }
+
+  test("componentMinLabels fails loudly at its round cap instead of " +
+       "returning partial labels") {
+    import spark.implicits._
+    val path = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val err = withBroadcastThreshold(Some(-1L)) {
+      intercept[IllegalStateException](
+        Dedup.componentMinLabels(path, maxRounds = 2))
+    }
+    assert(err.getMessage.contains("componentMinLabels") &&
+      err.getMessage.contains("maxRounds = 2"), err.getMessage)
+    // the driver finish runs no rounds, so the same cap is no obstacle
+    assert(Dedup.componentMinLabels(path, maxRounds = 2).collect()
+      .forall(_.getLong(1) == 1L))
   }
 
   test("componentMinLabels matches a driver-side union-find ground truth " +
@@ -403,10 +428,21 @@ class DedupSpec extends SparkSpec {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val truth = parent.keys.map(n => n -> find(n)).toMap
-    val labels = Dedup.componentMinLabels(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels == truth,
-      s"mismatch: ${labels.toSet.diff(truth.toSet).take(5)}")
+    // default threshold and exactly the symmetric edges' bytes: the
+    // driver finish; -1: the distributed rounds
+    val edgeBytes = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      .distinct.length * 16L
+    val runs = Seq(None, Some(-1L), Some(edgeBytes)).map { t =>
+      withBroadcastThreshold(t) {
+        val out = Dedup.componentMinLabels(pairs)
+        (out.schema, out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      }
+    }
+    runs.foreach { case (schema, labels) =>
+      assert(schema == runs.head._1, s"$schema vs ${runs.head._1}")
+      assert(labels == truth,
+        s"mismatch: ${labels.toSet.diff(truth.toSet).take(5)}")
+    }
   }
 
   test("testdata: minhash recovers exactly the pairs exact Jaccard >= 0.8") {

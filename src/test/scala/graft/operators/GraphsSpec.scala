@@ -368,24 +368,55 @@ class GraphsSpec extends SparkSpec {
     // square with one strong diagonal: unique max forest
     val fix = Seq((1L, 2L, 5L), (2L, 3L, 4L), (3L, 4L, 5L), (1L, 4L, 2L),
       (1L, 3L, 9L)).toDF("src", "dst", "w")
-    val got = Graphs.maxSpanningForest(fix).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == Set((1L, 3L, 9L), (1L, 2L, 5L), (3L, 4L, 5L)),
-      s"got $got") // (2,3,4) closes a cycle; 4 nodes -> 3 edges
     val sf = "/root/testdata/sf0.001"
     val edges = Graphs.coSupplierWeightedEdges(
         graft.Tables.lineitem(spark, sf))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val want = kruskalMax(edges)
-    val msf = graft.SparkEntry.queries("graph_mst")(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(msf == want,
-      s"forest mismatch: extra=${msf -- want} missing=${want -- msf}")
-    // forest invariant: |E| = |V| - #components
-    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct.size
-    val comps = graft.SparkEntry.queries("graph_wcc")(spark, sf)
-      .collect().map(_.getLong(1)).distinct.length
-    assert(msf.size == nodes - comps)
+    // Thresholds: the session default (Kruskal finish from the start),
+    // -1 (Borůvka rounds only) and one byte under the first working set
+    // (40 bytes a row: ca, cb and the 3-BIGINT edge struct), which forces
+    // a distributed round before the finish.
+    val mid = edges.length * 40L - 1
+    val runs = Seq(None, Some(-1L), Some(mid)).map { t =>
+      withBroadcastThreshold(t) {
+        val fixOut = Graphs.maxSpanningForest(fix)
+        val got = fixOut.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        assert(got == Set((1L, 3L, 9L), (1L, 2L, 5L), (3L, 4L, 5L)),
+          s"got $got") // (2,3,4) closes a cycle; 4 nodes -> 3 edges
+        val msf = graft.SparkEntry.queries("graph_mst")(spark, sf).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        assert(msf == want,
+          s"forest mismatch: extra=${msf -- want} missing=${want -- msf}")
+        // forest invariant: |E| = |V| - #components
+        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct.size
+        val comps = graft.SparkEntry.queries("graph_wcc")(spark, sf)
+          .collect().map(_.getLong(1)).distinct.length
+        assert(msf.size == nodes - comps)
+        fixOut.schema
+      }
+    }
+    assert(runs.distinct.size == 1, runs)
+  }
+
+  test("max spanning forest: a path that needs six Borůvka rounds equals " +
+       "Kruskal, and fails loudly at a round cap of 2") {
+    import spark.implicits._
+    // 64-node path; edge (i, i+1) weighs 64 - ctz(i), so every round only
+    // pairs up neighbouring components: log2(64) = 6 rounds
+    val path = (1L until 64L)
+      .map(i => (i, i + 1, 64L - java.lang.Long.numberOfTrailingZeros(i)))
+    val df = path.toDF("src", "dst", "w")
+    withBroadcastThreshold(Some(-1L)) {
+      val got = Graphs.maxSpanningForest(df).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == kruskalMax(path))
+      val err = intercept[IllegalStateException](
+        Graphs.maxSpanningForest(df, maxRounds = 2))
+      assert(err.getMessage.contains("maxSpanningForest") &&
+        err.getMessage.contains("maxRounds = 2"), err.getMessage)
+    }
   }
 
   /** Sequential synchronous k-truss peel; returns the surviving edges
